@@ -45,13 +45,6 @@ from sdg_data_catalog_spark.session import get_spark  # noqa: E402
 # steady-state times reported under "extended" (not part of "value", which
 # stays comparable round-over-round on the relational headline).
 EXTENDED = (
-    # ad-hoc (fresh-directory) q5/q18/q3/q6 plans: the headline names route
-    # to the bucketed / date-clustered layouts when they exist, so the
-    # ad-hoc delta is tracked here
-    "q5_adhoc",
-    "q18_adhoc",
-    "q3_adhoc",
-    "q6_adhoc",
     "pipeline_curation",
     "dedup_jaccard_pairs",
     "dedup_minhash_pairs",
@@ -354,11 +347,8 @@ CURATION_SCALE = (
 )
 
 # Headline set: the heaviest representative per operator family.
-# q5_revenue_by_nation / q18_large_orders are layout-aware: with the
-# bucketed tables on disk (true after the first bench run per tier) they
-# run the amortized-layout plans; the ad-hoc forms are tracked in EXTENDED
-# as q5_adhoc / q18_adhoc. q18_bucketed predates the routing and is kept
-# for round-over-round comparability of the headline total.
+# q18_bucketed (q18 over the orderkey-bucketed layout) is kept for
+# round-over-round comparability of the headline total.
 HEADLINE = (
     "q5_revenue_by_nation",
     "q1_pricing_summary",
@@ -482,10 +472,13 @@ def _timed_full_run(qs, name, spark, tier_dir, acc, reps: int = 2) -> None:
     plan-build time (eager localCheckpoints — funnel_conversion,
     graph_triangle_count, MG heavy hitters' candidate pass). Timing only
     _execute on a prebuilt plan would exclude that work from the steady
-    numbers while the DuckDB baseline does full work per run."""
+    numbers while the DuckDB baseline does full work per run. The cache
+    is cleared before each rep, untimed, so no rep reads what an earlier
+    one persisted."""
     df = qs[name](spark, tier_dir)
     _execute(df)  # warm: codegen, shuffles, broadcasts
     for _ in range(reps):
+        spark.catalog.clearCache()
         t0 = time.perf_counter()
         df = qs[name](spark, tier_dir)
         _execute(df)
@@ -619,18 +612,30 @@ def _duckdb_baseline(names, sf_dir, tables=None, reps: int = 3) -> dict[str, flo
 _FLOORS_PATH = os.path.join(_REPO, "BENCH_FLOORS.json")
 
 
-def _load_floors() -> dict:
+def _floor_key(tier: str) -> str:
+    """BENCH_FLOORS.json key: a floor holds for one tier on one core count
+    (`nproc`) — a 32-core floor says nothing about a 4-core host."""
+    return f"{tier}@c{len(os.sched_getaffinity(0))}"
+
+
+def _load_floors() -> dict | None:
+    """All recorded floors; {} when the file does not exist yet, None when
+    it exists but cannot be read or parsed."""
     try:
-        return json.load(open(_FLOORS_PATH))
-    except Exception:
+        with open(_FLOORS_PATH) as fh:
+            return json.load(fh)
+    except FileNotFoundError:
         return {}
+    except (OSError, ValueError):
+        return None
 
 
 def _save_floor_key(key: str, value) -> None:
     """Best-effort write of one BENCH_FLOORS.json entry (floors are an
-    optimization aid, never a gate on the record existing)."""
+    optimization aid, never a gate on the record existing). An unreadable
+    file is left as it is: rewriting it would drop every other entry."""
     floors = _load_floors()
-    if floors.get(key) == value:
+    if floors is None or floors.get(key) == value:
         return
     floors[key] = value
     try:
@@ -652,11 +657,8 @@ def _host_health_probe(tier: str, sf_dir: str, tables=None) -> dict:
     if it still exceeds the floor, the tier runs anyway but the record
     is stamped degraded=true so no round adopts it as an official
     number. Floors ratchet down monotonically on healthy runs."""
-    try:
-        floors = json.load(open(_FLOORS_PATH))
-    except Exception:
-        floors = {}
-    rec = floors.get(tier)
+    key = _floor_key(tier)
+    rec = (_load_floors() or {}).get(key)
     # Provenance (ADVICE r9): a bare number is a legacy multi-round floor
     # (confirmed); a first-run probe is stored unconfirmed so a degraded
     # host can't seed an inflated baseline that makes every later run on
@@ -673,7 +675,8 @@ def _host_health_probe(tier: str, sf_dir: str, tables=None) -> dict:
         probe = _duckdb_baseline(["q1_pricing_summary"], sf_dir, tables=tables).get(
             "q1_pricing_summary"
         )
-        if not (floor and probe and probe > 2 * floor) or _remaining() < 180:
+        over = floor is not None and probe is not None and probe > 2 * floor
+        if not over or _remaining() < 180:
             break
         _progress(
             f"host probe {tier}: q1 {probe}s > 2x floor {floor}s — retry {attempts}"
@@ -686,30 +689,22 @@ def _host_health_probe(tier: str, sf_dir: str, tables=None) -> dict:
         "attempts": attempts,
         # an unconfirmed floor can't certify health: stamp degraded=None
         # (unknown) unless a trusted floor says otherwise.
-        "degraded": (
-            bool(probe > 2 * floor)
-            if (floor and probe and confirmed)
-            else (None if not confirmed else False)
-        ),
+        "degraded": over if confirmed else None,
     }
-    if probe:
+    if probe is not None:
+        new = rec
         if floor is None:
-            floors[tier] = {"floor": probe, "confirmed": False}
+            new = {"floor": probe, "confirmed": False}
         elif not confirmed:
             if probe <= 1.5 * floor and floor <= 1.5 * probe:
                 # two independent runs agree within 1.5x — trust the floor
-                floors[tier] = {"floor": min(floor, probe), "confirmed": True}
+                new = {"floor": min(floor, probe), "confirmed": True}
             elif probe < floor:
                 # much faster than the seed: the seed was degraded — restart
-                floors[tier] = {"floor": probe, "confirmed": False}
+                new = {"floor": probe, "confirmed": False}
         elif probe < floor:
-            floors[tier] = {"floor": probe, "confirmed": True}
-        if floors.get(tier) != rec:
-            try:
-                with open(_FLOORS_PATH, "w") as fh:
-                    json.dump(floors, fh, indent=1)
-            except Exception:
-                pass
+            new = {"floor": probe, "confirmed": True}
+        _save_floor_key(key, new)
     return health
 
 
@@ -866,12 +861,10 @@ def _ensure_sf100() -> str | None:
     once the replica exists on disk every bench run measures it (r9
     verdict #4: the tier was opt-in end-to-end, so no round ever recorded
     it and the 100× claims stayed extrapolations). Purpose: real numbers
-    behind the 'survives 100×' story. Since round 11 the tier runs the
-    FULL headline on the engine's routed plans: the bucketed +
-    date-clustered layout copies (~12 GB next to the 15 GB replica) and
-    the persisted route probes were built once (r10 verdict #2 — the r10
-    record measured ad-hoc plans only and read 2.42× DuckDB for it);
-    reduced reps keep the tier inside the bench budget."""
+    behind the 'survives 100×' story. The tier runs the FULL headline,
+    whose q18_bucketed reads the bucketed layout copy built once next to
+    the 15 GB replica; reduced reps keep the tier inside the bench
+    budget."""
     out_dir = os.path.join(_REPO, ".scratch", "sf100")
     already = os.path.isfile(os.path.join(out_dir, "_COMPLETE"))
     if not already and os.environ.get("SPARK_GRAFT_SF100", "0") != "1":
@@ -928,64 +921,24 @@ def main() -> None:
     qs = all_queries()
     names = [n for n in HEADLINE if n in qs] or sorted(qs)[:5]
 
-    from sdg_data_catalog_spark.queries import scale_ops as _sops
     from sdg_data_catalog_spark.queries.scale_ops import (
         _ensure_bucketed_tables,
-        _ensure_date_clustered,
         bucketed_layout_on_disk,
-        date_clustered_layout_on_disk,
     )
 
     _apply_runtime_confs(spark)
 
-    def _layout(tier_dir: str, probe_reps: int = 3) -> dict:
+    def _layout(tier_dir: str) -> dict:
         """Build/register the bucketed layout OUTSIDE every timed window and
         record whether work happened (the r4 anomaly hypothesis list
         included a rebuild landing inside the timed region — this makes
         that impossible to miss in the record)."""
         pre = bucketed_layout_on_disk(tier_dir)
-        pre_dc = date_clustered_layout_on_disk(tier_dir)
         t0 = time.perf_counter()
         _ensure_bucketed_tables(spark, tier_dir)
-        _ensure_date_clustered(spark, tier_dir)
-        info = {
-            "existed_before": pre,
-            "date_clustered_existed_before": pre_dc,
-            "ensure_sec": round(time.perf_counter() - t0, 3),
-        }
+        info = {"existed_before": pre, "ensure_sec": round(time.perf_counter() - t0, 3)}
         assert bucketed_layout_on_disk(tier_dir), f"bucketed layout missing after ensure: {tier_dir}"
-        assert date_clustered_layout_on_disk(tier_dir), f"date-clustered layout missing after ensure: {tier_dir}"
-        # Measured route gate (r9 verdict): headline twin routing follows a
-        # persisted per-tier A/B, probed here — outside every timed window —
-        # and paid once per tier ever. If the budget is too tight to probe,
-        # routes stay absent and the headlines run their ad-hoc plans (safe).
-        t0 = time.perf_counter()
-        already_probed = os.path.isfile(_sops._routes_path(tier_dir))
-        if already_probed or _remaining() > 300:
-            info["routes"] = _sops.ensure_route_probes(spark, tier_dir, reps=probe_reps)
-            info["route_probe_sec"] = round(time.perf_counter() - t0, 3)
-        else:
-            info["routes"] = "skipped: budget"
         return info
-
-    def _resolved_plans(tier_dir: str) -> dict:
-        """Which PHYSICAL plan each routed headline name executes at this
-        tier (r10 verdict #4: the record must say which plan a headline
-        number measured, so a routed headline can never be misread as the
-        ad-hoc plan again). `None` from route_choice means the tier was
-        never probed and the query takes its ad-hoc form."""
-        routed = {
-            "q5_revenue_by_nation": "q5",
-            "q3_shipping_priority": "q3",
-            "q6_forecast_revenue": "q6",
-            "q18_large_orders": "q18",
-        }
-        plans = {
-            name: (_sops.route_choice(tier_dir, key) or f"{key}_adhoc (unprobed)")
-            for name, key in routed.items()
-        }
-        plans["q18_bucketed"] = "q18_bucketed (explicit twin)"
-        return plans
 
     layout_info = {"sf0": _layout(sf_dir)}
     # floor key = the actual tier directory name (sf0.1, sf0.001, …) so a
@@ -1026,7 +979,6 @@ def main() -> None:
         "baseline_duckdb": _duckdb_baseline(names, sf_dir),
         "session": {**_session_evidence(spark), **session_origin},
         "cache_state_headline": _cache_state(),
-        "plans": _resolved_plans(sf_dir),
         "layout": layout_info,
         "host_health": host_health,
         "budget_sec": _BUDGET,
@@ -1035,12 +987,9 @@ def main() -> None:
     if extended_err:
         result["extended_errors"] = extended_err
 
-    # The q5/q18 headline forms route to the bucketed layout only when it
-    # already exists on disk at plan-build time; a freshly (re)generated
-    # replica tier has no layouts yet, so the FIRST bench on it silently
-    # measured the ad-hoc plans (caught 2026-08-14: q18 3.66 s ad-hoc vs
-    # 1.70 s bucketed in the same run). Build the ingest-time layout before
-    # timing each tier — that is the deployment story the headline measures.
+    # q18_bucketed builds the bucketed layout on first use; a freshly
+    # (re)generated replica tier has none yet, so each tier's layout is
+    # built before timing — its ingest-time cost never lands in a rep.
     _progress("extended done; sf1 tier start")
     sf1_dir = _ensure_sf1() if _remaining() > 300 else None
     if not sf1_dir:
@@ -1060,7 +1009,6 @@ def main() -> None:
                 "reps": sf1_reps,
                 "baseline_duckdb": sf1_base,
                 "baseline_total": round(sum(sf1_base.values()), 4),
-                "plans": _resolved_plans(sf1_dir),
             }
         except Exception as e:  # noqa: BLE001
             result["skipped"]["sf1"] = f"error: {str(e).splitlines()[0][:120]}"
@@ -1095,7 +1043,6 @@ def main() -> None:
                 "reps": sf10_reps,
                 "baseline_duckdb": sf10_base,
                 "baseline_total": round(sum(sf10_base.values()), 4),
-                "plans": _resolved_plans(sf10_dir),
             }
         except Exception as e:  # noqa: BLE001
             result["skipped"]["sf10"] = f"error: {str(e).splitlines()[0][:120]}"
@@ -1116,18 +1063,12 @@ def main() -> None:
             else "replica absent (generation is opt-in: SPARK_GRAFT_SF100=1)"
         )
     if sf100_dir:
-        # r10 verdict #2: the tier that most resembles the 100-TB story
-        # must measure the engine's REAL plans, not the ad-hoc fallbacks.
-        # Layouts (bucketed + date-clustered copies, ~13 GB one-time next
-        # to the 15 GB replica) and route probes (reps=2 at this tier —
-        # single probe runs cost tens of seconds here) are built once and
-        # persisted; a budget-starved run that finds them already on disk
-        # pays only DDL registration. If the layouts can't be built within
-        # budget, fall back to the r10-style 3-query ad-hoc spot so the
-        # tier never vanishes from the record.
-        layouts_ready = bucketed_layout_on_disk(
-            sf100_dir
-        ) and date_clustered_layout_on_disk(sf100_dir)
+        # The bucketed layout q18_bucketed reads is built once and
+        # persisted; a budget-starved run that finds it already on disk
+        # pays only DDL registration. If it can't be built within budget,
+        # fall back to the r10-style 3-query spot so the tier never
+        # vanishes from the record.
+        layouts_ready = bucketed_layout_on_disk(sf100_dir)
         host_health["sf100"] = _host_health_probe(
             "sf100", sf100_dir, tables=SF1_TABLES
         )
@@ -1139,22 +1080,15 @@ def main() -> None:
             # Full headline ≈ 250 s spark + 270 s duck (measured 2026-08-16
             # dry run, layouts pre-built); with layouts absent add ~15 min
             # of one-time build. Below the gate, fall back to the r10-style
-            # 3-query ad-hoc spot (~90 s) so the tier never vanishes.
+            # 3-query spot (~90 s) so the tier never vanishes.
             full_gate = 800 if layouts_ready else 1800
             if _remaining() > full_gate:
-                result["layout"]["sf100"] = _layout(sf100_dir, probe_reps=2)
+                result["layout"]["sf100"] = _layout(sf100_dir)
                 spot = tuple(n for n in HEADLINE if n in qs)
-                # When the q18 route picks the bucketed plan at this tier,
-                # the routed headline and the explicit twin are the SAME
-                # physical plan — measuring both costs ~130 s (3 spark runs
-                # + 2 duck runs of an 18 s query) for zero information; the
-                # 'plans' annotation records the identity instead.
-                if _sops.route_choice(sf100_dir, "q18") == "q18_bucketed":
-                    spot = tuple(n for n in spot if n != "q18_bucketed")
-                note = "full headline, routed plans (layouts on disk); duck reps=1"
+                note = "full headline (bucketed layout on disk); duck reps=1"
             else:
-                spot = ("q1_pricing_summary", "q5_adhoc", "q6_adhoc")
-                note = "ad-hoc spot fallback: layout/full-set skipped (budget)"
+                spot = ("q1_pricing_summary", "q5_revenue_by_nation", "q6_forecast_revenue")
+                note = "3-query spot fallback: layout/full-set skipped (budget)"
             _, _, sf100_timings, sf100_reps = _bench_spark(
                 qs, spot, spark, sf100_dir, reps=2, per_query_gc=True
             )
@@ -1167,12 +1101,13 @@ def main() -> None:
             # more samples of the same estimator, never fewer); a query
             # still above 2× floor after re-repping is annotated in the
             # record as an outlier so the figure is never adopted blind.
-            qfloors = dict(_load_floors().get("sf100_queries") or {})
+            qkey = _floor_key("sf100_queries")
+            qfloors = dict((_load_floors() or {}).get(qkey) or {})
             sf100_outliers, sf100_rerepped = {}, []
             for qn in list(sf100_timings):
                 fl = qfloors.get(qn)
                 if (
-                    fl
+                    fl is not None
                     and sf100_timings[qn] > 2.0 * fl
                     and len(sf100_rerepped) < 4
                     and _remaining() > 420
@@ -1183,11 +1118,11 @@ def main() -> None:
                     sf100_reps[qn] = sf100_reps.get(qn, []) + extra
                     sf100_timings[qn] = min([sf100_timings[qn]] + extra)
                     sf100_rerepped.append(qn)
-                if fl and sf100_timings[qn] > 2.0 * fl:
+                if fl is not None and sf100_timings[qn] > 2.0 * fl:
                     sf100_outliers[qn] = {"floor": fl, "sec": sf100_timings[qn]}
                 best = sf100_timings[qn]
-                qfloors[qn] = round(min(fl, best), 4) if fl else round(best, 4)
-            _save_floor_key("sf100_queries", qfloors)
+                qfloors[qn] = round(best if fl is None else min(fl, best), 4)
+            _save_floor_key(qkey, qfloors)
             sf100_base = _duckdb_baseline(
                 spot, sf100_dir, tables=SF1_TABLES, reps=1
             )
@@ -1197,7 +1132,6 @@ def main() -> None:
                 "reps": sf100_reps,
                 "baseline_duckdb": sf100_base,
                 "baseline_total": round(sum(sf100_base.values()), 4),
-                "plans": _resolved_plans(sf100_dir),
                 "note": note,
             }
             if sf100_rerepped:

@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from sdg_data_catalog_spark.catalog import table
-from sdg_data_catalog_spark.queries.registry import register
+from sdg_data_catalog_spark.queries.registry import alias, register
 
 
 # ---------------------------------------------------------------------------
@@ -43,22 +43,6 @@ _Q5_ORACLE = """
 
 @register("q5_revenue_by_nation", oracle=_Q5_ORACLE)
 def q5_revenue_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Measured-route headline Q5: when the persisted per-tier A/B probe
-    (scale_ops.ensure_route_probes — see q3_shipping_priority for the
-    routing rationale) recorded the 32-bucket orderkey layout as faster,
-    the orderkey join rides it exchange-free (scale_ops.q5_bucketed —
-    the plan a warehouse runs daily; join-then-agg since r4, see its
-    A/B); unprobed tiers and fresh directories fall back to the ad-hoc
-    plan (q5_adhoc, same oracle, same answer)."""
-    from sdg_data_catalog_spark.queries import scale_ops
-
-    if scale_ops.route_choice(sf_dir, "q5") == "q5_bucketed":
-        return scale_ops.q5_bucketed(spark, sf_dir)
-    return q5_adhoc(spark, sf_dir)
-
-
-@register("q5_adhoc", oracle=_Q5_ORACLE)
-def q5_adhoc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Snowflake agg with the join-reduction move a cost-based planner
     would make, done by hand: semi-join reduction down the dim chain —
     region filter → nation → customer (broadcast), so orders shrinks to
@@ -84,7 +68,9 @@ def q5_adhoc(spark: SparkSession, sf_dir: str) -> DataFrame:
     join-then-agg 2.03 s vs pre-agg 2.44 s, identical results (same A/B
     direction as q5_bucketed). The shuffle-hash build side is the
     reduced orders projection (two narrow columns, ~1/32 per partition);
-    with pathological per-key skew drop the hint and let AQE pick."""
+    with pathological per-key skew drop the hint and let AQE pick.
+
+    The orderkey-bucketed plan is its own op, scale_ops.q5_bucketed."""
     lineitem = table(spark, sf_dir, "lineitem")
     orders = table(spark, sf_dir, "orders")
     customer = table(spark, sf_dir, "customer")
@@ -124,6 +110,9 @@ def q5_adhoc(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("line_count"),
         )
     )
+
+
+alias("q5_adhoc", "q5_revenue_by_nation")
 
 
 # ---------------------------------------------------------------------------
@@ -879,27 +868,6 @@ _Q3_ORACLE = """
 
 @register("q3_shipping_priority", oracle=_Q3_ORACLE)
 def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Measured-route headline Q3: delegates to the date-clustered twin
-    (scale_ops q3_clustered — both date predicates become row-group skips;
-    identical oracle/answer) ONLY where a persisted per-tier A/B probe
-    (scale_ops.ensure_route_probes, run by bench's layout step outside
-    every timed window) recorded the twin as faster. The r9
-    layout-exists-so-use-it gate regressed sf0.1 2x — 2x32 tiny clustered
-    files cost more task overhead than skipping saves at that scale,
-    while at sf10 the same layout wins — so the route is measured, never
-    assumed; unprobed tiers (driver correctness runs, fresh dirs) stay on
-    the ad-hoc plan. (An ORDERKEY-bucketed q3 twin measured WORSE and
-    stays unregistered — see q3_adhoc's plan notes; the date-clustered
-    twin attacks the scan component instead of the join.)"""
-    from sdg_data_catalog_spark.queries import scale_ops
-
-    if scale_ops.route_choice(sf_dir, "q3") == "q3_clustered":
-        return scale_ops._q3_clustered_impl(spark, sf_dir)
-    return q3_adhoc(spark, sf_dir)
-
-
-@register("q3_adhoc", oracle=_Q3_ORACLE)
-def q3_adhoc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q3 shape: selective dim filter → joins → agg → top-10. Both
     date predicates push into their scans; the filtered BUILDING customers
     broadcast onto orders, and the JOIN RUNS BEFORE THE AGGREGATION: the
@@ -922,7 +890,7 @@ def q3_adhoc(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast customer, then bucket-local shuffle-hash against filtered
     li_bkt — skipping the 1.35 M-row broadcast build) measured WORSE,
     1.08 s: one shared broadcast probe beats 32 per-bucket hash builds at
-    this selectivity, so a q3 layout twin is deliberately not registered.
+    this selectivity, so a bucketed q3 twin is deliberately not registered.
 
     Component decomposition (round 5, same boot, min-of-3 each with GC
     barriers; boot ran ~1.5× slower than r4's — Spark absolutes inflate
@@ -936,9 +904,12 @@ def q3_adhoc(spark: SparkSession, sf_dir: str) -> DataFrame:
     that an in-process engine pipelines into one pass; a second A/B of
     the zero-exchange-agg form (broadcast ords probing li_bkt — the agg
     rides the bucket partitioning, no exchange) measured 1.40 vs 1.48 —
-    within host noise, so the layout twin stays unregistered. A
+    within host noise, so the bucketed twin stays unregistered. A
     single-exchange plan with no structural scale-killer: at 100× the
-    exchange carries only the 3 M aggregated rows, never lineitem."""
+    exchange carries only the 3 M aggregated rows, never lineitem.
+
+    The date-clustered plan, where both date predicates become row-group
+    skips, is its own op, scale_ops q3_clustered."""
     customer = table(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
     orders = table(spark, sf_dir, "orders").filter(
         F.col("o_orderdate") < F.lit("1995-03-15").cast("timestamp")
@@ -966,6 +937,9 @@ def q3_adhoc(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+alias("q3_adhoc", "q3_shipping_priority")
+
+
 _Q6_ORACLE = """
     SELECT ROUND(CAST(SUM(l_extendedprice * l_discount) AS DOUBLE), 2) AS revenue,
            CAST(COUNT(*) AS BIGINT) AS n_lines
@@ -979,24 +953,10 @@ _Q6_ORACLE = """
 
 @register("q6_forecast_revenue", oracle=_Q6_ORACLE)
 def q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Measured-route headline Q6: routes to the shipdate-clustered
-    lineitem copy (scale_ops q6_clustered — the 1995-only predicate then
-    skips ~85% of row groups on footer stats) only where the persisted
-    per-tier A/B probe recorded it as faster (see q3_shipping_priority
-    for the routing rationale); unprobed tiers run the ad-hoc
-    pure-pushdown plan (q6_adhoc). Identical oracle/answer."""
-    from sdg_data_catalog_spark.queries import scale_ops
-
-    if scale_ops.route_choice(sf_dir, "q6") == "q6_clustered":
-        return scale_ops._q6_clustered_impl(spark, sf_dir)
-    return q6_adhoc(spark, sf_dir)
-
-
-@register("q6_adhoc", oracle=_Q6_ORACLE)
-def q6_adhoc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q6 shape: every predicate reaches the parquet scan (range +
     between + comparison), then a single global agg — the pure-pushdown
-    benchmark; at 100 TB row-group statistics skip most of the table."""
+    benchmark; at 100 TB row-group statistics skip most of the table.
+    The shipdate-clustered plan is its own op, scale_ops q6_clustered."""
     li = table(spark, sf_dir, "lineitem")
     return (
         li.filter(
@@ -1010,6 +970,9 @@ def q6_adhoc(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_lines"),
         )
     )
+
+
+alias("q6_adhoc", "q6_forecast_revenue")
 
 
 _Q18_ORACLE = """
@@ -1031,28 +994,12 @@ _Q18_ORACLE = """
 
 @register("q18_large_orders", oracle=_Q18_ORACLE)
 def q18_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Measured-route headline Q18: when the persisted per-tier A/B probe
-    (scale_ops.ensure_route_probes — see q3_shipping_priority for the
-    routing rationale) recorded the 32-bucket orderkey layout as faster,
-    the dominant exchange (the full-fact per-orderkey quantity sum) is
-    free — delegate to the bucketed plan (scale_ops.q18_bucketed,
-    identical oracle/answer). Unprobed tiers and fresh directories fall
-    back to the ad-hoc plan (q18_adhoc). (r9 data made the measurement
-    mandatory here: q18_bucketed was SLOWER than ad-hoc at sf10, 1.82 vs
-    1.67 s, yet the existence gate still routed to it.)"""
-    from sdg_data_catalog_spark.queries import scale_ops
-
-    if scale_ops.route_choice(sf_dir, "q18") == "q18_bucketed":
-        return scale_ops.q18_bucketed(spark, sf_dir)
-    return q18_adhoc(spark, sf_dir)
-
-
-@register("q18_adhoc", oracle=_Q18_ORACLE)
-def q18_adhoc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q18 shape: HAVING-filtered aggregation as the build side of a
     join (the aggregated side shrinks 4000:1 before shuffling), then ordered
     limit. The groupBy-then-join ordering is the scale-critical choice —
-    joining first would shuffle every lineitem row."""
+    joining first would shuffle every lineitem row. The orderkey-bucketed
+    plan, whose per-orderkey sum needs no exchange, is its own op,
+    scale_ops.q18_bucketed."""
     li = table(spark, sf_dir, "lineitem")
     orders = table(spark, sf_dir, "orders")
     customer = table(spark, sf_dir, "customer")
@@ -1074,6 +1021,9 @@ def q18_adhoc(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.col("o_totalprice").desc(), "o_orderkey")
         .limit(20)
     )
+
+
+alias("q18_adhoc", "q18_large_orders")
 
 
 # ---------------------------------------------------------------------------

@@ -199,13 +199,15 @@ def dedup_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
       but min/max partial-aggregate to one row per (shingle, partition)
       where count-distinct expands to a (shingle, doc_id)-grain exchange
       (occurrence-sized for mostly-unique shingles).
-    - per-doc n_shingles is size(t) − 7 straight off the token array
-      (the explode emits exactly that many rows per doc by construction)
-      and the occurrence join shrinks to a LEFT SEMI against only the
-      DUPLICATED shingles, so the doc-grain rollup aggregates dup
-      occurrences only, not the whole corpus stream; zero-dup docs
-      come back via COALESCE over the doc-grain left join — exactly the
-      oracle's tot LEFT JOIN hits shape."""
+    - per-doc n_shingles and n_dup_shingles come from ONE doc-grain
+      rollup: the occurrence stream LEFT-joined to the duplicated
+      shingles, COUNT(*) and COUNT(multi). Zero-dup docs fall out with
+      n_dup 0, so documents is scanned twice (the duplicate census and
+      the stream), not three times. A/B against the earlier LEFT SEMI +
+      size(t) − 7 + doc-grain left join form (3 scans), 4 cores,
+      interleaved, identical rows: 4× sf0.01 replica (2k docs), min-of-9
+      1.22 vs 1.29 s (medians 1.50 vs 1.47 s); 20× sf0.1 replica (100k
+      docs), min-of-7 29.4 vs 33.2 s (medians 32.6 vs 38.4 s)."""
     docs = table(spark, sf_dir, "documents")
     w = F.split("text", " ")
     t = F.col("t")
@@ -224,24 +226,13 @@ def dedup_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
         shingles.groupBy("shingle")
         .agg((F.min("doc_id") != F.max("doc_id")).alias("multi"))
         .filter(F.col("multi"))
-        .select("shingle")
-    )
-    hits = (
-        shingles.join(dup, "shingle", "left_semi")
-        .groupBy("doc_id")
-        .agg(F.count(F.lit(1)).alias("n_dup"))
-    )
-    tot = base.select(
-        "doc_id", (F.size(t) - (_SHINGLE - 1)).cast("bigint").alias("n_shingles")
     )
     return (
-        tot.join(hits, "doc_id", "left")
-        .select(
-            "doc_id",
-            "n_shingles",
-            F.coalesce(F.col("n_dup"), F.lit(0)).cast("bigint").alias(
-                "n_dup_shingles"
-            ),
+        shingles.join(dup, "shingle", "left")
+        .groupBy("doc_id")
+        .agg(
+            F.count(F.lit(1)).alias("n_shingles"),
+            F.count("multi").alias("n_dup_shingles"),
         )
         .orderBy("doc_id")
     )

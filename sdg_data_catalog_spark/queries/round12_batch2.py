@@ -572,54 +572,59 @@ def pipeline_pretrain_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per-doc fingerprint sort+md5 → fp exchange → window subtree
     # executed twice inside the one eager-checkpoint job (ReuseExchange
     # shares only the exchange, not the window sort above it). In-query
-    # multi-pass reuse, inside the timed region.
+    # multi-pass reuse, inside the timed region, released once the
+    # checkpoint has consumed it.
     from pyspark import StorageLevel
 
     flagged = flagged.withColumn(
         "s2", F.col("q_ok") & (F.row_number().over(wfp) == 1)
     ).persist(StorageLevel.MEMORY_AND_DISK)
-    shingle = lambda t: F.transform(  # noqa: E731
-        F.sequence(F.lit(0), F.size(t) - 3),
-        lambda i: F.concat_ws(
-            " ", F.element_at(t, i + 1), F.element_at(t, i + 2), F.element_at(t, i + 3)
-        ),
-    )
-    toks = F.split(F.col("text"), " ")
-    # the >=3-token guard must run BEFORE the explode: for shorter docs
-    # F.sequence(0, size-3) descends and element_at(t, 0) raises (array
-    # indices start at 1) — mirrors the oracle's WHERE len(t) >= 3
-    ev_sh = (
-        docs.filter(F.col("doc_id") % 97 == 0)
-        .filter(F.size(toks) >= 3)
-        .select(F.explode(shingle(toks)).alias("esh"))
-        .distinct()
-    )
-    cand_sh = (
-        flagged.filter(F.col("s2") & (F.col("doc_id") % 97 != 0))
-        .filter(F.size(toks) >= 3)
-        .select("doc_id", F.explode(shingle(toks)).alias("sh"))
-        .distinct()
-    )
-    contaminated = cand_sh.join(ev_sh, cand_sh["sh"] == ev_sh["esh"]).select(
-        "doc_id"
-    ).distinct()
-    flags = (
-        flagged.join(
-            contaminated.withColumn("contam", F.lit(True)), "doc_id", "left"
+    try:
+        shingle = lambda t: F.transform(  # noqa: E731
+            F.sequence(F.lit(0), F.size(t) - 3),
+            lambda i: F.concat_ws(
+                " ", F.element_at(t, i + 1), F.element_at(t, i + 2), F.element_at(t, i + 3)
+            ),
         )
-        .select(
-            "doc_id",
-            "ws_tokens",
-            "q_ok",
-            "s2",
-            (
-                F.col("s2")
-                & (F.col("doc_id") % 97 != 0)
-                & F.col("contam").isNull()
-            ).alias("s3"),
+        toks = F.split(F.col("text"), " ")
+        # the >=3-token guard must run BEFORE the explode: for shorter docs
+        # F.sequence(0, size-3) descends and element_at(t, 0) raises (array
+        # indices start at 1) — mirrors the oracle's WHERE len(t) >= 3
+        ev_sh = (
+            docs.filter(F.col("doc_id") % 97 == 0)
+            .filter(F.size(toks) >= 3)
+            .select(F.explode(shingle(toks)).alias("esh"))
+            .distinct()
         )
-        .localCheckpoint(eager=True)  # (doc_id, ws_tokens, 3 bools) — no text
-    )
+        cand_sh = (
+            flagged.filter(F.col("s2") & (F.col("doc_id") % 97 != 0))
+            .filter(F.size(toks) >= 3)
+            .select("doc_id", F.explode(shingle(toks)).alias("sh"))
+            .distinct()
+        )
+        contaminated = cand_sh.join(ev_sh, cand_sh["sh"] == ev_sh["esh"]).select(
+            "doc_id"
+        ).distinct()
+        flags = (
+            flagged.join(
+                contaminated.withColumn("contam", F.lit(True)), "doc_id", "left"
+            )
+            .select(
+                "doc_id",
+                "ws_tokens",
+                "q_ok",
+                "s2",
+                (
+                    F.col("s2")
+                    & (F.col("doc_id") % 97 != 0)
+                    & F.col("contam").isNull()
+                ).alias("s3"),
+            )
+            .localCheckpoint(eager=True)  # (doc_id, ws_tokens, 3 bools) — no text
+        )
+    finally:
+        # the eager checkpoint above is the persisted relation's last consumer
+        flagged.unpersist()
 
     def stage(sid: int, name: str, cond) -> DataFrame:
         return flags.agg(

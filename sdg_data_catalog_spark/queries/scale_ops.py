@@ -15,10 +15,8 @@ bucketed join; PartitionFilters on the pruned scan).
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
-import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -52,9 +50,8 @@ _BUCKET_SPECS = {
 def bucketed_layout_on_disk(sf_dir: str) -> bool:
     """True when the current-version 32-bucket orderkey layouts for this
     scale factor already exist on disk (ingest-time cost already paid).
-    Pure filesystem probe — never builds anything, so fresh directories
-    stay on the ad-hoc plans; a session that sees True can register the
-    external tables with DDL only (cheap)."""
+    Pure filesystem probe — never builds anything; a session that sees
+    True can register the external tables with DDL only (cheap)."""
     sfn = _sf_name(sf_dir)
     return all(
         os.path.isfile(
@@ -227,8 +224,8 @@ def join_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
 # so the scan decodes only the row groups the predicate touches — at 100 TB
 # the difference between scanning a month and scanning the decade, paid
 # once at write time. Same economics as the orderkey bucket layout above:
-# built once per scale factor, probed (never built) by the headline
-# routers, registered queries return the identical relational answer.
+# built once per scale factor on first use by q3_clustered / q6_clustered,
+# which return the identical relational answer.
 _DATE_LAYOUT_VERSION = "v1"
 
 _DATE_SPECS = {
@@ -248,21 +245,6 @@ _DATE_SPECS = {
 
 def _date_layout_path(sf_dir: str, prefix: str) -> str:
     return os.path.join(_SCRATCH, _sf_name(sf_dir), f"{prefix}_data")
-
-
-def date_clustered_layout_on_disk(sf_dir: str) -> bool:
-    """True when the current-version date-clustered fact layouts for this
-    scale factor already exist (ingest-time cost already paid). Pure
-    filesystem probe — never builds, so fresh directories stay on the
-    ad-hoc plans."""
-    return all(
-        os.path.isfile(
-            os.path.join(
-                _date_layout_path(sf_dir, p), f"_LAYOUT_{_DATE_LAYOUT_VERSION}"
-            )
-        )
-        for p in _DATE_SPECS
-    )
 
 
 def _ensure_date_clustered(spark: SparkSession, sf_dir: str) -> None:
@@ -365,97 +347,6 @@ def _register_date_clustered_twins() -> None:
 
 
 _register_date_clustered_twins()
-
-
-# ---------------------------------------------------------------------------
-# Measured route gate (r9 verdict #2): headline layout routing must be
-# MEASURED, never assumed. The r9 filesystem-existence gate regressed q3 2x
-# at sf0.1 — there the 2x32 tiny range-partitioned files cost more in task
-# overhead than row-group skipping saves, while at sf10 the same layout wins.
-# ensure_route_probes() runs each headline twin against its ad-hoc plan
-# (interleaved min-of-N, the same discipline as the docstring A/Bs) once per
-# scale factor and persists the winner next to the layout markers; the
-# headline queries then read the persisted winner and fall back to the
-# ad-hoc plan when no measurement exists — a fresh directory or an unprobed
-# tier never pays for an unproven layout.
-# ---------------------------------------------------------------------------
-
-_ROUTE_VERSION = "v1"
-
-# route key -> (ad-hoc plan, layout twin, twin's layout probe)
-_ROUTE_TWINS = {
-    "q3": ("q3_adhoc", "q3_clustered", date_clustered_layout_on_disk),
-    "q6": ("q6_adhoc", "q6_clustered", date_clustered_layout_on_disk),
-    "q5": ("q5_adhoc", "q5_bucketed", bucketed_layout_on_disk),
-    "q18": ("q18_adhoc", "q18_bucketed", bucketed_layout_on_disk),
-}
-
-
-def _routes_path(sf_dir: str) -> str:
-    return os.path.join(_SCRATCH, _sf_name(sf_dir), f"_ROUTES_{_ROUTE_VERSION}.json")
-
-
-def route_choice(sf_dir: str, key: str) -> str | None:
-    """The persisted measured winner for a headline routing decision, or
-    None when this tier has never been probed (callers then take the
-    ad-hoc plan). The twin is honored only while its layout is still on
-    disk — a cleaned scratch dir degrades safely to ad-hoc."""
-    try:
-        with open(_routes_path(sf_dir)) as fh:
-            rec = json.load(fh).get(key)
-    except Exception:
-        return None
-    if not rec:
-        return None
-    winner = rec.get("winner")
-    adhoc, twin, probe = _ROUTE_TWINS.get(key, (None, None, None))
-    if winner == twin and probe is not None and not probe(sf_dir):
-        return adhoc
-    return winner
-
-
-def ensure_route_probes(spark: SparkSession, sf_dir: str, reps: int = 3) -> dict:
-    """Measure each headline twin pair once per scale factor and persist
-    the winners. One warm-up run per variant, then `reps` timed runs
-    interleaved across the pair (run-order drift cancels — the r5 bench
-    misread adhoc-vs-bucketed exactly because the cold variant ran
-    first), min per variant, winner = lower min. Called by bench's
-    layout step OUTSIDE every timed window; idempotent via the persisted
-    file, so the probe cost is paid once per tier ever."""
-    path = _routes_path(sf_dir)
-    if os.path.isfile(path):
-        with open(path) as fh:
-            existing = json.load(fh)
-        # a lower-rep record (e.g. a test's quick reps=1 probe) must not
-        # satisfy the bench's reps=3 measurement — re-probe and replace
-        if all(
-            existing.get(k, {}).get("reps", 0) >= reps for k in _ROUTE_TWINS
-        ):
-            return existing
-    from sdg_data_catalog_spark.queries.registry import all_queries
-
-    _ensure_bucketed_tables(spark, sf_dir)
-    _ensure_date_clustered(spark, sf_dir)
-    qs = all_queries()
-    routes: dict = {}
-    for key, (adhoc, twin, _probe) in _ROUTE_TWINS.items():
-        pair = (adhoc, twin)
-        times: dict[str, list[float]] = {n: [] for n in pair}
-        for name in pair:  # warm-up: JIT + page cache, untimed
-            qs[name](spark, sf_dir).collect()
-        for _ in range(reps):
-            for name in pair:
-                t0 = time.perf_counter()
-                qs[name](spark, sf_dir).collect()
-                times[name].append(time.perf_counter() - t0)
-        secs = {n: round(min(ts), 4) for n, ts in times.items()}
-        routes[key] = {"winner": min(secs, key=secs.get), "sec": secs, "reps": reps}
-    os.makedirs(os.path.dirname(path), exist_ok=True)
-    tmp = path + ".tmp"
-    with open(tmp, "w") as fh:
-        json.dump(routes, fh, indent=1)
-    os.replace(tmp, path)
-    return routes
 
 
 @register(
@@ -760,8 +651,7 @@ def q5_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     (2.7x at sf100 on this same plan). The same interleaved run also
     re-measured adhoc-vs-bucketed at BOTH tiers: bucketed wins at sf0.1
     too (0.40 vs 0.51 s) — the r5 bench's contrary reading (headline
-    0.75 vs adhoc 0.49) was run-order noise (headline ran first/cold),
-    so the layout routing stays tier-independent."""
+    0.75 vs adhoc 0.49) was run-order noise (headline ran first/cold)."""
     _ensure_bucketed_tables(spark, sf_dir)
     sfn = _sf_name(sf_dir)
     li = spark.table(f"li_bkt_{sfn}")

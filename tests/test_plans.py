@@ -195,59 +195,23 @@ def test_q5_bucketed_join_no_exchange(spark, sf_dir):
     assert len(shuffles) == 1, shuffles
 
 
-def test_headline_routing_follows_measured_routes(spark, sf_dir):
-    """Measured-route headline routing (r9 verdict: the layout-exists gate
-    regressed q3 2x at sf0.1): each headline must read the layout its
-    tier's persisted A/B probe recorded as the winner, and the *_adhoc
-    twins must always read the raw parquet — all registered under the
-    same oracles."""
-    from sdg_data_catalog_spark.queries import scale_ops
-
-    routes = scale_ops.ensure_route_probes(spark, sf_dir, reps=1)
+def test_headline_plans_read_raw_parquet(spark, sf_dir):
+    """The q3/q5/q6/q18 headlines build one plan over the raw parquet and
+    never read a layout copy, whatever is on disk; each *_adhoc name is the
+    same callable as its headline. The layout plans are their own ops
+    (q5_bucketed, q18_bucketed, q3_clustered, q6_clustered)."""
     qs = all_queries()
-    markers = {
-        "q5": ("q5_revenue_by_nation", "q5_bucketed", "li_bkt_"),
-        "q18": ("q18_large_orders", "q18_bucketed", "li_bkt_"),
-        "q3": ("q3_shipping_priority", "q3_clustered", "li_sd_data"),
-        "q6": ("q6_forecast_revenue", "q6_clustered", "li_sd_data"),
+    pairs = {
+        "q5_adhoc": "q5_revenue_by_nation",
+        "q18_adhoc": "q18_large_orders",
+        "q3_adhoc": "q3_shipping_priority",
+        "q6_adhoc": "q6_forecast_revenue",
     }
-    for key, (headline, twin, marker) in markers.items():
-        assert routes[key]["winner"] in routes[key]["sec"], key
-        plan = _formatted_plan(qs[headline](spark, sf_dir))
-        if routes[key]["winner"] == twin:
-            assert marker in plan, (key, "expected twin layout in plan")
-        else:
-            assert marker not in plan, (key, "expected ad-hoc plan")
-    for name in ("q5_adhoc", "q18_adhoc", "q3_adhoc", "q6_adhoc"):
+    for adhoc, headline in pairs.items():
+        assert qs[adhoc] is qs[headline], adhoc
+    for name in (*pairs, *pairs.values()):
         plan = _formatted_plan(qs[name](spark, sf_dir))
         assert "li_bkt_" not in plan and "li_sd_data" not in plan, name
-
-
-def test_route_choice_unprobed_and_stale_layout_fall_back_to_adhoc(tmp_path):
-    """An unprobed tier returns None (headlines then run ad-hoc), and a
-    routes file whose twin layout was cleaned from disk degrades to the
-    ad-hoc plan instead of crashing on a missing path."""
-    import json
-    import os
-
-    from sdg_data_catalog_spark.queries import scale_ops
-
-    assert scale_ops.route_choice(str(tmp_path / "sf_unknown"), "q3") is None
-    # fake a probed tier whose clustered layout no longer exists
-    fake_sf = str(tmp_path / "sf_fake")
-    os.makedirs(fake_sf)
-    routes_path = scale_ops._routes_path(fake_sf)
-    os.makedirs(os.path.dirname(routes_path), exist_ok=True)
-    with open(routes_path, "w") as fh:
-        json.dump(
-            {"q3": {"winner": "q3_clustered", "sec": {}, "reps": 1}}, fh
-        )
-    try:
-        assert scale_ops.route_choice(fake_sf, "q3") == "q3_adhoc"
-    finally:
-        import shutil
-
-        shutil.rmtree(os.path.dirname(routes_path), ignore_errors=True)
 
 
 def test_q3_q6_clustered_scan_the_date_clustered_layout(spark, sf_dir):

@@ -1,6 +1,6 @@
 """Full-run steady timing of registered ops (bench `_timed_full_run`
 methodology: plan rebuild + noop-write inside the timed region, 1 warmup,
-min of N reps, GC barrier per rep).
+min of N reps, cache cleared and GC barrier per rep, both untimed).
 
 Usage:
     python tools/ab_op.py <sf_dir> <reps> <name> [name ...]
@@ -32,6 +32,7 @@ def main() -> None:
         acc: list[float] = []
         bench._timed_full_run(qs, name, spark, sf_dir, acc, reps=0)  # warm
         for _ in range(reps):
+            spark.catalog.clearCache()
             bench._gc_barrier(spark)
             t0 = time.perf_counter()
             df = qs[name](spark, sf_dir)

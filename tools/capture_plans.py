@@ -4,9 +4,7 @@ Usage:
     python tools/capture_plans.py <tag> <suffix> [name ...]
 
 Writes plans/<tag>/<name>_<suffix>.txt for each query name (default: the
-bench HEADLINE set). Layouts/routes are ensured first so the captured plan
-is the one the bench actually executes at the given tier
-($SPARK_GRAFT_SF_DIR, default sf0.1).
+bench HEADLINE set) at the tier $SPARK_GRAFT_SF_DIR (default sf0.1).
 """
 
 from __future__ import annotations
@@ -33,15 +31,6 @@ def main() -> None:
 
     spark = get_spark("capture-plans")
     bench._apply_runtime_confs(spark)
-    from sdg_data_catalog_spark.queries.scale_ops import (
-        _ensure_bucketed_tables,
-        _ensure_date_clustered,
-        ensure_route_probes,
-    )
-
-    _ensure_bucketed_tables(spark, sf_dir)
-    _ensure_date_clustered(spark, sf_dir)
-    ensure_route_probes(spark, sf_dir)
 
     qs = all_queries()
     for name in names:

@@ -1,12 +1,10 @@
-"""One-time sf100 layout build + route probe + full-headline dry run.
+"""One-time sf100 layout build + full-headline dry run.
 
-Pre-pays everything the round driver's bench would otherwise pay inside
-its budget (r10 verdict #2): the bucketed and date-clustered layout
-copies under .scratch/sf100 (~13 GB, ingest-time cost of the deployment
-story), the persisted _ROUTES_v1.json route probes (reps=2, matching
-bench's sf100 call), and one rehearsal of the full 10-query headline with
-the DuckDB baseline so pathological entries surface HERE, not in the
-official record.
+Pre-pays what bench would otherwise pay inside its budget: the bucketed
+layout copy under .scratch/sf100 that q18_bucketed reads (ingest-time
+cost of the deployment story), and one rehearsal of the full 10-query
+headline with the DuckDB baseline so pathological entries surface HERE,
+not in the official record.
 
 Usage: python tools/prepay_sf100.py
 """
@@ -36,13 +34,6 @@ def main() -> int:
     t0 = time.time()
     sops._ensure_bucketed_tables(spark, sf100)
     print(f"bucketed layout: {time.time() - t0:.1f}s", flush=True)
-    t0 = time.time()
-    sops._ensure_date_clustered(spark, sf100)
-    print(f"date-clustered layout: {time.time() - t0:.1f}s", flush=True)
-
-    t0 = time.time()
-    routes = sops.ensure_route_probes(spark, sf100, reps=2)
-    print(f"route probes: {time.time() - t0:.1f}s -> {routes}", flush=True)
 
     from bench import HEADLINE, SF1_TABLES, _duckdb_baseline
 

@@ -1,5 +1,5 @@
-"""q18 sf100 re-measurement (r12 verdict #3): the round-12 record showed
-q18 27.6 s vs round-11's 18.2 s on the same routed q18_bucketed plan
+"""q18_bucketed sf100 re-measurement (r12 verdict #3): the round-12 record
+showed q18 27.6 s vs round-11's 18.2 s on the same q18_bucketed plan
 (DuckDB 14.6 s, duck reps=1 / spark min-of-2). This reruns BOTH engines
 with more reps so run variance can't masquerade as a regression:
 spark = 1 warmup + N timed fresh-plan noop-writes with a GC barrier per
@@ -27,20 +27,18 @@ def main() -> int:
 
     import duckdb
 
-    from sdg_data_catalog_spark.queries import scale_ops as sops
     from sdg_data_catalog_spark.queries.registry import all_oracles, all_queries
     from sdg_data_catalog_spark.session import get_spark
 
     spark = get_spark("remeasure-q18")
     qs, ors = all_queries(), all_oracles()
-    print("route:", sops.route_choice(sf100, "q18"), flush=True)
 
     def gc():
         spark.sparkContext._jvm.System.gc()
         time.sleep(1)
 
     def spark_rep() -> float:
-        df = qs["q18_large_orders"](spark, sf100)
+        df = qs["q18_bucketed"](spark, sf100)
         t0 = time.perf_counter()
         df.write.format("noop").mode("overwrite").save()
         return time.perf_counter() - t0
